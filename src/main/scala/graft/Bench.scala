@@ -1,7 +1,12 @@
 package graft
 
-/** Benchmark entry: runs every registered query on SPARK_GRAFT_SF_DIR and
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark entry: runs every registered query (or the entries named in
+  * the optional comma-separated argument) on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall seconds.
+  *
+  * Usage: runMain graft.Bench [name1,name2,...]
   *
   * Measurement protocol (v3 — isolation-first):
   *   - one cold pass (session/JIT/codegen warmup — fixed overhead, not
@@ -55,7 +60,7 @@ object Bench {
     * bit_xor, not sum — ANSI mode (Spark 4 default) would raise on a
     * Long-sum overflow of hash values; xor cannot overflow and is
     * order-insensitive. */
-  def force(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+  def force(name: String, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.{col, expr, xxhash64}
     if (decodeForced(name)) {
       df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
@@ -66,23 +71,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.get(master, cpus.toInt)
-
-    // Release cross-query state so each measurement starts clean: cached
-    // relations, then a driver GC so ContextCleaner reclaims dead
-    // broadcast/shuffle blocks before the next timed run.
-    def isolate(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-    }
-
-    def time(body: => Unit): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try { body; Right((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable => Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
-    }
+    val names = SparkEntry.select(args.headOption)
+    val spark = GraftSession.get()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val master = spark.sparkContext.master
 
     // SPARK_GRAFT_BENCH_TRACE=1: per-query JVM-state trace to stderr —
     // cumulative GC time delta across the query's passes, live heap
@@ -115,22 +107,9 @@ object Bench {
         .map(size).sum / (1024 * 1024)
     }
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = names.map { name =>
       val gc0 = if (trace) gcMs else 0L
-      val cold = time(force(name, fn(spark, sfDir)))
-      val warm = cold match {
-        case Right(_) =>
-          // ANY failing warm pass fails the query — an intermittent crash
-          // (e.g. OOM) must surface in `errors`, not be silently replaced
-          // by the surviving pass's time.
-          val runs = (1 to 2).map { _ =>
-            isolate()
-            time(force(name, fn(spark, sfDir)))
-          }
-          runs.collectFirst { case l @ Left(_) => l }
-            .getOrElse(Right(runs.collect { case Right(v) => v }.min))
-        case left => left
-      }
+      val (cold, warm) = measure(spark, sfDir, name)
       if (trace) {
         val w = warm match { case Right(v) => f"$v%.3f"; case Left(_) => "-1" }
         val c = cold match { case Right(v) => f"$v%.3f"; case Left(_) => "-1" }
@@ -203,15 +182,13 @@ object Bench {
       case (name, Right(v)) if historyMedians.get(name)
         .exists(m => v > retimeK * m && v - m > math.max(0.15, 0.5 * m)) => name
     }.flatMap { name =>
-      val fn = SparkEntry.queries(name)
-      val runs = (1 to 2).map { _ => isolate(); time(force(name, fn(spark, sfDir))) }
-        .collect { case Right(v) => v }
+      val runs = warmPasses(spark, sfDir, name).collect { case Right(v) => v }
       if (runs.nonEmpty) Some((name, runs.min)) else None
     }
 
     // Local-mode scheduling floor: the cost of launching a trivial job.
     // A failing trivial job is a broken harness, not a floor of -1.
-    isolate()
+    isolate(spark)
     val floorRuns = (1 to 3).map(_ => time(spark.range(1).count())).collect { case Right(v) => v }
     val floor = if (floorRuns.nonEmpty) floorRuns.min.toString else "null"
 
@@ -245,8 +222,43 @@ object Bench {
     // sit ≈ 1 and a downstream heuristic cannot tell "honors
     // $SPARK_GRAFT_CPUS" from "ignores it". Emitting the master and the
     // context's actual defaultParallelism lets that check clear itself.
-    println(s"""{"metric":"total_warm","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"floor_sec":$floor,"total_above_floor":$aboveFloor,"retimed":$retimedJson,"cpus":${cpus.toInt},"master":"${esc(master)}","default_parallelism":${spark.sparkContext.defaultParallelism},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_warm","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"floor_sec":$floor,"total_above_floor":$aboveFloor,"retimed":$retimedJson,"cpus":$cpus,"master":"${esc(master)}","default_parallelism":${spark.sparkContext.defaultParallelism},"sf":"$sfDir"}""")
     spark.stop()
     if (results.exists(_._2.isLeft)) sys.exit(1)
+  }
+
+  /** Release cross-query state so each measurement starts clean: cached
+    * relations, then a driver GC so ContextCleaner reclaims dead
+    * broadcast/shuffle blocks before the next timed run. */
+  def isolate(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    System.gc()
+  }
+
+  /** Wall seconds of `body`, or the message of what it threw. */
+  def time(body: => Unit): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
+  }
+
+  /** Two forced passes of entry `name`, each after [[isolate]]. */
+  def warmPasses(spark: SparkSession, sfDir: String, name: String): Seq[Either[String, Double]] = {
+    val fn = SparkEntry.queries(name)
+    (1 to 2).map { _ => isolate(spark); time(force(name, fn(spark, sfDir))) }
+  }
+
+  /** The bench protocol for one entry: `(cold, warm)`, where cold is one
+    * forced pass and warm the minimum of the two [[warmPasses]] after it.
+    * ANY failing warm pass fails the entry — an intermittent crash (e.g.
+    * OOM) must surface, not be replaced by the surviving pass's time. */
+  def measure(spark: SparkSession, sfDir: String,
+      name: String): (Either[String, Double], Either[String, Double]) = {
+    val cold = time(force(name, SparkEntry.queries(name)(spark, sfDir)))
+    val warm = cold.flatMap { _ =>
+      val runs = warmPasses(spark, sfDir, name)
+      runs.collectFirst { case Left(m) => m }.toLeft(runs.collect { case Right(v) => v }.min)
+    }
+    (cold, warm)
   }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *     DuckDB oracle byte-for-byte.
   */
 object GraftSession {
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -44,7 +44,17 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  def get(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
+  /** The session of a dev entry point (`Bench`, `Verify`, the
+    * `graft.tools` mains): master `SPARK_GRAFT_MASTER`, else
+    * `local[$SPARK_GRAFT_CPUS]`, else one local thread per available
+    * processor; shuffle partitions follow the CPU count. */
+  def get(): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    get(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
+  }
+
+  def get(master: String, shufflePartitions: Int = 32): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

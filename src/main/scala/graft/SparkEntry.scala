@@ -470,6 +470,20 @@ object SparkEntry {
   def oracleSqlSmallSf: Map[String, String] =
     graft.queries.PipelineQueries.oracleSqlSmallSf
 
+  /** The sorted names of a comma-separated entry list (the optional
+    * argument of [[Bench]], [[Verify]] and `tools.Profile`), or of every
+    * entry when there is none. An unknown name fails instead of running
+    * a smaller set than asked for. */
+  def select(list: Option[String]): Seq[String] = {
+    val all = queries.keySet
+    list.fold(all.toSeq.sorted) { l =>
+      val names = l.split(',').map(_.trim).filter(_.nonEmpty).toSeq.distinct.sorted
+      val unknown = names.filterNot(all)
+      require(unknown.isEmpty, s"unknown registry entries: ${unknown.mkString(",")}")
+      names
+    }
+  }
+
   private def tpchOracleSql: Map[String, String] = Map(
     "q01_point_lookup_pk" ->
       "SELECT * FROM orders WHERE o_orderkey = 4242",

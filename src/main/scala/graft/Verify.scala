@@ -4,14 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/compare.py`).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name1,name2,...] — with
+  * an entry list, only those entries and their oracles are dumped. */
 object Verify {
 
   /** Dump each query's result to `outDir/<name>` and the oracle map to
-    * `outDir/oracle_sql.json` — shared by the full driver run ([[main]])
-    * and the subset iteration tool ([[graft.tools.Probe]]), so the JSON
-    * escaping rules can never diverge between the two paths. */
+    * `outDir/oracle_sql.json`. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame],
       oracleSqlRaw: Map[String, String]): Unit = {
@@ -22,7 +23,7 @@ object Verify {
     // map carries placeholders, rewritten here before the JSON lands.
     // The rewrite happens in the SAME JVM that ran the gates, so the
     // oracle can never read a different artifact than the engine built.
-    val ivfRoot = graft.pipeline.IvfIndex.artifactRoot(spark)
+    val ivfRoot = graft.pipeline.ArtifactStore.root(spark, "ivf")
     val sfName = Paths.get(sfDir).getFileName.toString
     // Small-fixture overrides (round-17): where the O(N × centroids)
     // derivation is feasible in SQL, swap in the fully-independent
@@ -69,14 +70,14 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER overrides the master URL — the multi-JVM
-    // shake-out path (`local-cluster[2,8,4g]`), where closure capture
-    // and JVM-local state actually serialize across executor processes
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.get(master, cpus.toInt)
-    dump(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql)
+    val (sfDir, outDir) = (args(0), args(1))
+    val keep = SparkEntry.select(args.lift(2)).toSet
+    // SPARK_GRAFT_MASTER=local-cluster[...] is the multi-JVM shake-out
+    // path, where closure capture and JVM-local state actually serialize
+    // across executor processes
+    val spark = GraftSession.get()
+    dump(spark, sfDir, outDir, SparkEntry.queries.filter(kv => keep(kv._1)),
+      SparkEntry.oracleSql.filter(kv => keep(kv._1)))
     spark.stop()
   }
 }

@@ -13,8 +13,7 @@ import org.apache.spark.sql.types._
   * family's bitstream surface (the numeric back half — requantization,
   * IMDCT filterbank, windowing, overlap-add — is [[AacSynth]]).
   *
-  * Faithfulness boundary, stated the same way [[Mp3Synth]] states its
-  * window seam. ISO/IEC 13818-7 splits into bitstream SYNTAX (closed
+  * Faithfulness boundary. ISO/IEC 13818-7 splits into bitstream SYNTAX (closed
   * procedures) and TABLE DATA:
   *   - the SYNTAX is implemented exactly: the ADTS element walk
   *     (SCE id 0, END id 7, byte-align), ics_info for all four
@@ -40,9 +39,8 @@ import org.apache.spark.sql.types._
   *     driver's SQL oracle re-derives every codeword length without a
   *     thousand-row VALUES table. Streams produced by THIS encoder
   *     half decode bit-exactly (the gate pins the exact bit count);
-  *     streams from a spec-table encoder need the published tables
-  *     swapped in at [[withBooks]] — the one seam, mirroring
-  *     [[Mp3Synth.withWindow]].
+  *     streams from a spec-table encoder do not decode: the published
+  *     tables are not here, and the books and bands are fixed `val`s.
   *
   * The tuple→index maps are fixed mixed-radix folds (signed books:
   * Σ(vᵢ+lav)·(2lav+1)^(dim−1−i); unsigned: Σ mᵢ·(lav+1)^(dim−1−i),
@@ -64,7 +62,7 @@ object AacLc {
     * three closed-form width tiers (16×16, 8×32, 8×64). The published
     * 13818-7 Table 8.4 layout (49 non-uniform bands at 44.1 kHz) is
     * table data; this substitute keeps band→bin closed-form for the
-    * oracle. Swap via [[withBands]]. */
+    * oracle. */
   val LongBands: Array[Int] = Array.tabulate(33) { b =>
     if (b <= 16) 16 * b
     else if (b <= 24) 256 + 32 * (b - 16)
@@ -74,21 +72,6 @@ object AacLc {
   /** Short-window band offsets — 8 uniform bands of 16 over the
     * 128-bin short spectrum (substitute for Table 8.8). */
   val ShortBands: Array[Int] = Array.tabulate(9)(b => 16 * b)
-
-  /** Seam: run `body` against caller-supplied band tables (e.g. the
-    * published 13818-7 rate-dependent layouts). */
-  def withBands[A](long: Array[Int], short: Array[Int])(body: => A): A = {
-    val (l0, s0) = (bandsLong, bandsShort)
-    bandsLong = long; bandsShort = short
-    try body finally { bandsLong = l0; bandsShort = s0 }
-  }
-  @volatile private var bandsLong: Array[Int] = LongBands
-  @volatile private var bandsShort: Array[Int] = ShortBands
-  /** The band tables currently in effect (the swap seam's view) — the
-    * synthesis half resolves bands through these so a [[withBands]]
-    * swap applies to the whole chain, not just the entropy walk. */
-  def currentLongBands: Array[Int] = bandsLong
-  def currentShortBands: Array[Int] = bandsShort
 
   // ==== codebooks ========================================================
 
@@ -135,7 +118,7 @@ object AacLc {
       while (i < len.length) { m.put((len(i) << 20) | code(i), i); i += 1 }
       m
     }
-    def decode(r: BitReader): Int = {
+    def decode(r: Bits.Reader): Int = {
       var c = 0
       var l = 0
       while (l < maxLen) {
@@ -149,64 +132,15 @@ object AacLc {
   }
   private def gammaBook(nSym: Int): Book = new Book(Array.tabulate(nSym)(gammaLen))
 
-  /** Default (substitute) books: spectral 1–11 + the scalefactor book
+  /** The (substitute) books: spectral 1–11 + the scalefactor book
     * over zigzagged DPCM −60..60 (index 2|v| − [v<0]). */
-  private val defaultSpectral: Array[Book] =
+  private val spectralBooks: Array[Book] =
     Array.tabulate(12)(cb => if (cb == 0) null else gammaBook(CbMetas(cb).nSym))
-  private val defaultSf: Book = gammaBook(121)
-
-  @volatile private var spectralBooks: Array[Book] = defaultSpectral
-  @volatile private var sfBook: Book = defaultSf
-
-  /** Seam: run `body` with caller-supplied code tables (per-symbol bit
-    * lengths in canonical order — e.g. the published ISO books). */
-  def withBooks[A](spectralLens: Array[Array[Int]], sfLens: Array[Int])(body: => A): A = {
-    val (s0, f0) = (spectralBooks, sfBook)
-    spectralBooks = Array.tabulate(12)(cb =>
-      if (cb == 0) null else new Book(spectralLens(cb)))
-    sfBook = new Book(sfLens)
-    try body finally { spectralBooks = s0; sfBook = f0 }
-  }
+  private val sfBook: Book = gammaBook(121)
 
   /** Zigzag a DPCM scalefactor difference into the book index. */
   def sfZigzag(v: Int): Int = if (v >= 0) 2 * v else -2 * v - 1
   def sfUnzigzag(i: Int): Int = if ((i & 1) == 0) i / 2 else -(i + 1) / 2
-
-  // ==== bit IO ===========================================================
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    var bitCount: Long = 0
-    def u(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nBits += 1; bitCount += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    def align(): Array[Byte] = {
-      if (nBits != 0) { cur <<= (8 - nBits); out.write(cur); cur = 0; nBits = 0 }
-      out.toByteArray
-    }
-  }
-
-  final class BitReader(b: Array[Byte], startBit: Long) {
-    var pos: Long = startBit
-    def u(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) {
-        if (pos >= b.length.toLong * 8) throw new IllegalArgumentException("eof")
-        v = (v << 1) | ((b((pos >> 3).toInt) >> (7 - (pos & 7).toInt)) & 1)
-        pos += 1; i += 1
-      }
-      v
-    }
-  }
 
   // ==== the encoder half =================================================
 
@@ -300,7 +234,7 @@ object AacLc {
 
   /** Encode one EIGHT_SHORT raw_data_block. */
   private def encodeRdbShort(p: GenShortParams): Array[Byte] = {
-    val w = new BitWriter
+    val w = new Bits.Writer
     w.u(0, 3) // SCE
     w.u(0, 4)
     w.u(p.globalGain, 8)
@@ -347,10 +281,10 @@ object AacLc {
           val book = spectralBooks(cb)
           var band = first
           while (band < first + n) {
-            val width = bandsShort(band + 1) - bandsShort(band)
+            val width = ShortBands(band + 1) - ShortBands(band)
             var wIn = 0
             while (wIn < p.groups(g)) {
-              val base = (winOf(g) + wIn) * 128 + bandsShort(band)
+              val base = (winOf(g) + wIn) * 128 + ShortBands(band)
               var o = 0
               while (o < width) {
                 val vals = Array.tabulate(m.dim)(i => p.mag(cb, base + o + i))
@@ -459,7 +393,7 @@ object AacLc {
   /** Encode one raw_data_block (SCE + END + align) for (seed, frame). */
   private def encodeRdb(p: GenParams, tns: GenTnsParams = null,
       pulse: GenPulseParams = null): Array[Byte] = {
-    val w = new BitWriter
+    val w = new Bits.Writer
     w.u(0, 3) // id_syn_ele SCE
     w.u(0, 4) // element_instance_tag
     w.u(p.globalGain, 8)
@@ -529,8 +463,8 @@ object AacLc {
         val book = spectralBooks(cb)
         var b = first
         while (b < first + n) {
-          var k = bandsLong(b)
-          val end = bandsLong(b + 1)
+          var k = LongBands(b)
+          val end = LongBands(b + 1)
           while (k < end) {
             val vals = Array.tabulate(m.dim)(i => p.mag(cb, k + i))
             val idx = tupleIndex(cb, vals)
@@ -681,7 +615,7 @@ object AacLc {
         val frameLen = ((u8(off + 3) & 3) << 11) | (u8(off + 4) << 3) |
           ((u8(off + 5) >> 5) & 7)
         if (frameLen < 7 || off + frameLen > b.length) return None
-        val r = new BitReader(b, (off + 7).toLong * 8)
+        val r = new Bits.Reader(b, (off + 7).toLong * 8)
         frames += decodeSce(r)
         // END + byte-align must land exactly on the ADTS boundary
         if (r.u(3) != 7) return None
@@ -701,7 +635,7 @@ object AacLc {
     24000, 22050, 16000, 12000, 11025, 8000)
 
   /** Parse one SCE after its 3-bit id has NOT yet been read. */
-  private def decodeSce(r: BitReader): Ics = {
+  private def decodeSce(r: Bits.Reader): Ics = {
     if (r.u(3) != 0) throw new IllegalArgumentException("not SCE")
     r.u(4) // element_instance_tag
     val globalGain = r.u(8)
@@ -727,7 +661,7 @@ object AacLc {
         if (r.u(1) != 0) throw new IllegalArgumentException("predictor")
         (ms, Array(1))
       }
-    val bands = if (short) bandsShort else bandsLong
+    val bands = if (short) ShortBands else LongBands
     if (maxSfb > bands.length - 1) throw new IllegalArgumentException("max_sfb")
     val nGroups = groups.length
     val sectBits = if (short) 3 else 5

@@ -23,9 +23,9 @@ package graft.pipeline
   *     data anywhere, and the Princen-Bradley condition
   *     w[n]² + w[N/2−1−n]² = 1 holds by construction (spec-pinned)
   *
-  * The one inherited seam is upstream: [[AacLc]]'s substitute Huffman
-  * books. Streams from this repo's encoder half reach REAL PCM with
-  * every numeric stage ISO-exact.
+  * The one inherited limit is upstream: [[AacLc]]'s substitute Huffman
+  * books and bands. Streams from this repo's encoder half reach REAL
+  * PCM with every numeric stage ISO-exact.
   *
   * Scale: pure per-row kernels invoked from scan-stage expressions;
   * nothing here shuffles or leaves its task.
@@ -114,7 +114,7 @@ object AacSynth {
     * for coded bands, 0 elsewhere. */
   def requantize(ics: AacLc.Ics): Array[Double] = {
     val out = new Array[Double](1024)
-    val bands = AacLc.currentLongBands
+    val bands = AacLc.LongBands
     var b = 0
     while (b < ics.maxSfb) {
       val sf = ics.sf(b)
@@ -137,7 +137,7 @@ object AacSynth {
     * per-GROUP scalefactors. */
   def requantizeShort(ics: AacLc.Ics): Array[Double] = {
     val out = new Array[Double](1024)
-    val bands = AacLc.currentShortBands
+    val bands = AacLc.ShortBands
     var g = 0
     var win = 0
     while (g < ics.groups.length) {
@@ -250,11 +250,11 @@ object AacSynth {
         var w = 0
         while (w < 8) {
           if (w < ics.tns.length && ics.tns(w).nonEmpty)
-            applyTns(x, w * 128, AacLc.currentShortBands, ics.maxSfb, ics.tns(w))
+            applyTns(x, w * 128, AacLc.ShortBands, ics.maxSfb, ics.tns(w))
           w += 1
         }
       } else if (ics.tns(0).nonEmpty) {
-        applyTns(x, 0, AacLc.currentLongBands, ics.maxSfb, ics.tns(0))
+        applyTns(x, 0, AacLc.LongBands, ics.maxSfb, ics.tns(0))
       }
     }
     x

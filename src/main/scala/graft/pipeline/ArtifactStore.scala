@@ -13,6 +13,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ArtifactStore {
 
+  /** Root directory of one artifact family: `<root>/<family>`, where
+    * `<root>` is the session conf `graft.artifactRoot`, else the env var
+    * `GRAFT_ARTIFACT_ROOT`, else `artifacts` under the working directory. */
+  def root(spark: SparkSession, family: String): String =
+    Paths.get(spark.conf.getOption("graft.artifactRoot")
+      .orElse(sys.env.get("GRAFT_ARTIFACT_ROOT")).getOrElse("artifacts"), family)
+      .toAbsolutePath.toString
+
   /** Read the artifact `root/key`, building it first if missing or stale.
     *
     * @param sourceFile the corpus file whose mtime invalidates the

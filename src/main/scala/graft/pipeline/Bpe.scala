@@ -117,15 +117,6 @@ object Bpe {
   /** Bump when the training convention or artifact layout changes. */
   val FormatVersion = 1
 
-  /** Session conf key for the artifact root; falls back to a directory
-    * under the JVM working dir rather than any absolute literal. */
-  val RootConfKey = "graft.bpe.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_BPE_ROOT"))
-      .getOrElse(java.nio.file.Paths.get("artifacts", "bpe").toAbsolutePath.toString)
-
   /** Read the persisted merge table `(round, left, right, cnt)` for the
     * corpus at `corpusDir`, training it first if missing or stale.
     * `variant` tags the training slice ([[graft.pipeline.DedupIndex]]
@@ -137,7 +128,7 @@ object Bpe {
     val corpus = java.nio.file.Paths.get(corpusDir).getFileName.toString
     val key = s"bpe_${corpus}_${variant}_v${FormatVersion}_r$rounds"
     ArtifactStore.ensure(spark, s"$corpusDir/documents.parquet",
-      artifactRootOverride.getOrElse(artifactRoot(spark)), key) { tmp =>
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "bpe")), key) { tmp =>
       trainDF(spark, docs, textCol, rounds)
         .coalesce(1) // ≤ rounds rows — one small file
         .write.mode("overwrite").parquet(tmp)

@@ -98,7 +98,7 @@ object Components {
     // where safe TRUNCATE its lineage: with a reliable dir via
     // RDD.checkpoint; in single-JVM local[] mode via localCheckpoint.
     // Persisting alone keeps the full dependency DAG alive — measured
-    // (r17, JobTrace on p_d23 at sf0.1): each round's job dragged every
+    // (r17, a per-job trace of p_d23 at sf0.1): each round's job dragged every
     // prior round's stages through the DAGScheduler as "skipped"
     // stages, growing per round to a 20+ stage graph and costing
     // 160–210 ms per 6-task round against a ~60 ms floor; truncation

@@ -24,13 +24,6 @@ object DedupIndex {
   /** Bump when a sketch algorithm or artifact layout changes. */
   val FormatVersion = 1
 
-  val RootConfKey = "graft.dedup.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_DEDUP_ROOT"))
-      .getOrElse(Paths.get("artifacts", "dedup").toAbsolutePath.toString)
-
   private def ensure(spark: SparkSession, corpusDir: String, key: String,
       root: String, build: => DataFrame): DataFrame =
     ArtifactStore.ensure(spark, s"$corpusDir/documents.parquet", root, key) {
@@ -46,7 +39,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"minhash_${Paths.get(corpusDir).getFileName}_${variant}_v${FormatVersion}_n${shingleN}_h$numHashes",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       Dedup.minHashSignatureRows(corpus, idCol, textCol, shingleN, numHashes))
 
   // ---- incremental maintenance ------------------------------------------
@@ -68,7 +61,7 @@ object DedupIndex {
       shingleN: Int = 3, numHashes: Int = 32,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       segKey(corpusDir, variant, shingleN, numHashes),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => Dedup.minHashSignatureRows(baseDocs, idCol, textCol, shingleN, numHashes)
@@ -81,7 +74,7 @@ object DedupIndex {
       shingleN: Int = 3, numHashes: Int = 32,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       segKey(corpusDir, variant, shingleN, numHashes)) {
       tmp => Dedup.minHashSignatureRows(newDocs, idCol, textCol, shingleN, numHashes)
         .write.mode("overwrite").parquet(tmp)
@@ -94,7 +87,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"winnow_${Paths.get(corpusDir).getFileName}_${variant}_v${FormatVersion}_w$window",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       TextAnalysis.rollingFingerprintRows(corpus, idCol, textCol, window))
 
   /** Persisted POSITIONED window-fingerprint rows `(__id, __start, __fp)`
@@ -106,7 +99,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"substr_${Paths.get(corpusDir).getFileName}_${variant}_v${FormatVersion}_w$window",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       Dedup.windowFingerprintRows(corpus, idCol, textCol, window))
 
   /** Segmented positional window fingerprints: the streaming-era
@@ -121,7 +114,7 @@ object DedupIndex {
       baseDocs: DataFrame, idCol: String, textCol: String, variant: String,
       window: Int = 8, artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       substrSegKey(corpusDir, variant, window),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => Dedup.windowFingerprintRows(baseDocs, idCol, textCol, window)
@@ -132,7 +125,7 @@ object DedupIndex {
       newDocs: DataFrame, idCol: String, textCol: String, variant: String,
       window: Int = 8, artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       substrSegKey(corpusDir, variant, window)) {
       tmp => Dedup.windowFingerprintRows(newDocs, idCol, textCol, window)
         .write.mode("overwrite").parquet(tmp)
@@ -149,7 +142,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"imgdhash_${Paths.get(corpusDir).getFileName}_${variant}_v$FormatVersion",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       imageDHashRows(images, idCol, bytesCol))
 
   private def imageDHashRows(images: DataFrame, idCol: String,
@@ -169,7 +162,7 @@ object DedupIndex {
       baseImages: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       imgSegKey(corpusDir, variant),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => imageDHashRows(baseImages, idCol, bytesCol)
@@ -181,7 +174,7 @@ object DedupIndex {
       newImages: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       imgSegKey(corpusDir, variant)) {
       tmp => imageDHashRows(newImages, idCol, bytesCol)
         .write.mode("overwrite").parquet(tmp)
@@ -198,7 +191,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"audiofp_${Paths.get(corpusDir).getFileName}_${variant}_v$FormatVersion",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       audioFingerprintRows(audio, idCol, bytesCol))
 
   private def audioFingerprintRows(audio: DataFrame, idCol: String,
@@ -215,7 +208,7 @@ object DedupIndex {
       baseAudio: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       audioSegKey(corpusDir, variant),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => audioFingerprintRows(baseAudio, idCol, bytesCol)
@@ -227,7 +220,7 @@ object DedupIndex {
       newAudio: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       audioSegKey(corpusDir, variant)) {
       tmp => audioFingerprintRows(newAudio, idCol, bytesCol)
         .write.mode("overwrite").parquet(tmp)
@@ -244,7 +237,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"videofp_${Paths.get(corpusDir).getFileName}_${variant}_v$FormatVersion",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       videoFingerprintRows(video, idCol, bytesCol))
 
   private def videoFingerprintRows(video: DataFrame, idCol: String,
@@ -261,7 +254,7 @@ object DedupIndex {
       baseVideo: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       videoSegKey(corpusDir, variant),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => videoFingerprintRows(baseVideo, idCol, bytesCol)
@@ -273,7 +266,7 @@ object DedupIndex {
       newVideo: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       videoSegKey(corpusDir, variant)) {
       tmp => videoFingerprintRows(newVideo, idCol, bytesCol)
         .write.mode("overwrite").parquet(tmp)
@@ -290,7 +283,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"structfp_${Paths.get(corpusDir).getFileName}_${variant}_v$FormatVersion",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       structFingerprintRows(av, idCol, bytesCol))
 
   private def structFingerprintRows(av: DataFrame, idCol: String,
@@ -308,7 +301,7 @@ object DedupIndex {
       baseAv: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       structSegKey(corpusDir, variant),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => structFingerprintRows(baseAv, idCol, bytesCol)
@@ -320,7 +313,7 @@ object DedupIndex {
       newAv: DataFrame, idCol: String, bytesCol: String, variant: String,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       structSegKey(corpusDir, variant)) {
       tmp => structFingerprintRows(newAv, idCol, bytesCol)
         .write.mode("overwrite").parquet(tmp)
@@ -335,7 +328,7 @@ object DedupIndex {
       artifactRootOverride: Option[String] = None): DataFrame =
     ensure(spark, corpusDir,
       s"simhash_${Paths.get(corpusDir).getFileName}_${variant}_v${FormatVersion}_n${shingleN}_b${bits}_$hashTag",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       Dedup.simHashFingerprints(corpus, idCol, textCol, shingleN, hashFn, bits))
 
   private def simSegKey(corpusDir: String, variant: String, hashTag: String,
@@ -350,7 +343,7 @@ object DedupIndex {
       hashTag: String, hashFn: Column => Column, shingleN: Int = 3,
       bits: Int = 64, artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       simSegKey(corpusDir, variant, hashTag, shingleN, bits),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => Dedup.simHashFingerprints(baseDocs, idCol, textCol, shingleN, hashFn, bits)
@@ -363,7 +356,7 @@ object DedupIndex {
       hashFn: Column => Column, shingleN: Int = 3, bits: Int = 64,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "dedup")),
       simSegKey(corpusDir, variant, hashTag, shingleN, bits)) {
       tmp => Dedup.simHashFingerprints(newDocs, idCol, textCol, shingleN, hashFn, bits)
         .write.mode("overwrite").parquet(tmp)

@@ -93,65 +93,6 @@ object FlacPcm {
     crc
   }
 
-  // ==== bit plumbing ======================================================
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def u(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nBits += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    /** Rice-code one residual at parameter k: zigzag, quotient in
-      * unary (q zeros then a 1), k low remainder bits. */
-    def rice(r: Int, k: Int): Unit = {
-      val z = if (r < 0) (-r << 1) - 1 else r << 1
-      var q = z >>> k
-      while (q > 0) { u(0, 1); q -= 1 }
-      u(1, 1)
-      if (k > 0) u(z & ((1 << k) - 1), k)
-    }
-    def align(): Array[Byte] = {
-      if (nBits != 0) { cur <<= (8 - nBits); out.write(cur); cur = 0; nBits = 0 }
-      out.toByteArray
-    }
-  }
-
-  private final class BitReader(b: Array[Byte], startBit: Long) {
-    var pos: Long = startBit
-    def u(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) {
-        if (pos >= b.length.toLong * 8) throw new IllegalArgumentException("eof")
-        v = (v << 1) | ((b((pos >> 3).toInt) >> (7 - (pos & 7).toInt)) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def signed(bits: Int): Int = {
-      if (bits == 0) return 0
-      val v = u(bits)
-      if ((v & (1 << (bits - 1))) != 0) v - (1 << bits) else v
-    }
-    /** Count zeros until the terminating 1 (Rice quotient / unary). */
-    def unary(): Int = {
-      var q = 0
-      while (u(1) == 0) {
-        q += 1
-        if (q > (1 << 20)) throw new IllegalArgumentException("runaway unary")
-      }
-      q
-    }
-  }
-
   // ==== the encoder half ==================================================
 
   /** Deterministic per-seed construction parameters — every closed form
@@ -215,7 +156,7 @@ object FlacPcm {
     var z = 0
     while (z < 16) { out.write(0); z += 1 } // MD5 unknown
     // --- frame header (byte-aligned by construction: 6 bytes + CRC-8)
-    val hdr = new BitWriter
+    val hdr = new Bits.Writer
     hdr.u(0x3ffe, 14) // sync
     hdr.u(0, 1)       // reserved
     hdr.u(0, 1)       // fixed blocksize stream
@@ -227,7 +168,7 @@ object FlacPcm {
     hdr.u(0, 8)       // frame number 0 (UTF-8 single byte)
     hdr.u(p.n - 1, 8)
     val hdrBytes = hdr.align()
-    val frame = new BitWriter
+    val frame = new Bits.Writer
     hdrBytes.foreach(b => frame.u(b & 0xff, 8))
     frame.u(crc8(hdrBytes, 0, hdrBytes.length), 8)
     // --- subframes
@@ -337,7 +278,7 @@ object FlacPcm {
       }
       if (off >= b.length) return None
       val frameStart = off
-      val r = new BitReader(b, frameStart.toLong * 8)
+      val r = new Bits.Reader(b, frameStart.toLong * 8)
       if (r.u(14) != 0x3ffe) return None
       if (r.u(1) != 0) return None
       r.u(1) // blocking strategy (frame- vs sample-numbered; both fine)
@@ -450,9 +391,7 @@ object FlacPcm {
               while (i3 < end) { res(i3) = r.signed(raw); i3 += 1 }
             } else {
               while (i3 < end) {
-                val q = r.unary()
-                val z = (q << kk) | (if (kk > 0) r.u(kk) else 0)
-                res(i3) = (z >>> 1) ^ -(z & 1)
+                res(i3) = r.rice(kk)
                 i3 += 1
               }
             }

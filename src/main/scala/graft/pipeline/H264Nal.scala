@@ -48,60 +48,10 @@ import org.apache.spark.sql.types._
   */
 object H264Nal {
 
-  // ==== bit-level plumbing ================================================
-
-  /** MSB-first bit writer with exp-Golomb support (spec §9.1: ue(v) is
-    * floor(log2(v+1)) zeros, a 1, then v+1−2^k in k bits). */
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def u(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nBits += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    def ue(v: Int): Unit = {
-      val x = v + 1
-      var k = 31 - Integer.numberOfLeadingZeros(x) // floor(log2(x))
-      u(0, k)
-      u(1, 1)
-      while (k > 0) { k -= 1; u((x >> k) & 1, 1) }
-    }
-    /** rbsp_trailing_bits: stop bit then zero-pad to a byte boundary. */
-    def trailing(): Array[Byte] = {
-      u(1, 1)
-      if (nBits != 0) { cur <<= (8 - nBits); out.write(cur); cur = 0; nBits = 0 }
-      out.toByteArray
-    }
-  }
-
-  /** MSB-first bit reader over an RBSP (already de-escaped). */
-  private final class BitReader(b: Array[Byte]) {
-    private var pos = 0
-    def u(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) {
-        if (pos >= b.length * 8) throw new IllegalArgumentException("eof")
-        v = (v << 1) | ((b(pos >> 3) >> (7 - (pos & 7))) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def ue(): Int = {
-      var zeros = 0
-      while (u(1) == 0) {
-        zeros += 1
-        if (zeros > 31) throw new IllegalArgumentException("ue overflow")
-      }
-      if (zeros == 0) 0 else ((1 << zeros) | u(zeros)) - 1
-    }
+  /** rbsp_trailing_bits: stop bit then zero-pad to a byte boundary. */
+  private def trailing(w: Bits.Writer): Array[Byte] = {
+    w.u(1, 1)
+    w.align()
   }
 
   /** RBSP → EBSP: insert an emulation-prevention 0x03 whenever two
@@ -156,7 +106,7 @@ object H264Nal {
   private def sliceLen(d: Long, i: Int): Int = (d % 17).toInt + 8 + i
 
   private def buildSps(d: Long): Array[Byte] = {
-    val w = new BitWriter
+    val w = new Bits.Writer
     w.u(profileIdc(d), 8)
     w.u(0, 8) // constraint_set flags + reserved_zero_2bits
     w.u(levelIdc(d), 8)
@@ -181,7 +131,7 @@ object H264Nal {
     w.u(if (crop) 1 else 0, 1)
     if (crop) { w.ue(0); w.ue(cropRight(d)); w.ue(0); w.ue(cropBottom(d)) }
     w.u(0, 1) // vui_parameters_present_flag
-    w.trailing()
+    trailing(w)
   }
 
   /** Zero-run pattern planted in every third slice payload — escaping
@@ -237,7 +187,7 @@ object H264Nal {
       idrCount: Int, sliceCount: Int, sliceRbspBytes: Long, sps: Option[SpsInfo])
 
   private def parseSps(rbsp: Array[Byte]): Option[SpsInfo] = try {
-    val r = new BitReader(rbsp)
+    val r = new Bits.Reader(rbsp, 0)
     val profile = r.u(8)
     r.u(8) // constraint flags + reserved
     val level = r.u(8)

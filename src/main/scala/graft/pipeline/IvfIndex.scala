@@ -40,15 +40,6 @@ object IvfIndex {
     * assignment derives from the persisted codebook artifact.) */
   val FormatVersion = 3
 
-  /** Session conf key for the artifact root; falls back to a directory
-    * under the JVM working dir rather than any absolute literal. */
-  val RootConfKey = "graft.ivf.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_IVF_ROOT"))
-      .getOrElse(Paths.get("artifacts", "ivf").toAbsolutePath.toString)
-
   /** Coarse-quantizer choice; `token` feeds the artifact cache key. */
   sealed trait Quantizer { def token: String }
 
@@ -115,7 +106,7 @@ object IvfIndex {
       embCol: String, idCol: String, quantizer: Quantizer = Stride(),
       artifactRootOverride: Option[String] = None,
       variant: String = ""): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "ivf"))
     val key = centroidsKey(corpusDir, quantizer, variant)
     ArtifactStore.ensure(spark, s"$corpusDir/embeddings.parquet", root, key) { tmp =>
       codebook(emb, idCol, embCol, quantizer)
@@ -133,7 +124,7 @@ object IvfIndex {
       embCol: String, idCol: String, quantizer: Quantizer = Stride(),
       artifactRootOverride: Option[String] = None,
       variant: String = ""): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "ivf"))
     val corpus = Paths.get(corpusDir).getFileName.toString
     val vtok = if (variant.isEmpty) "" else s"_$variant"
     val key = s"${corpus}_v${FormatVersion}_${quantizer.token}$vtok"
@@ -173,7 +164,7 @@ object IvfIndex {
       embCol: String, idCol: String, quantizer: Quantizer = Stride(),
       artifactRootOverride: Option[String] = None,
       variant: String = "seg"): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "ivf"))
     ArtifactStore.ensureSegmented(spark, root, segKey(corpusDir, quantizer, variant),
       sourceFile = Some(s"$corpusDir/embeddings.parquet")) { tmp =>
       val cents = ensureCentroids(spark, corpusDir, baseEmb, embCol, idCol,
@@ -195,7 +186,7 @@ object IvfIndex {
       embCol: String, idCol: String, quantizer: Quantizer = Stride(),
       artifactRootOverride: Option[String] = None,
       variant: String = "seg"): Unit = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "ivf"))
     val centKey = centroidsKey(corpusDir, quantizer, s"seg_$variant")
     val centPath = Paths.get(s"$root/$centKey")
     require(java.nio.file.Files.exists(centPath),

@@ -24,15 +24,6 @@ object LshIndex {
   /** Bump when the signature algorithm or artifact layout changes. */
   val FormatVersion = 1
 
-  /** Session conf key for the artifact root (falls back to env, then a
-    * working-dir-relative default — never a hardcoded absolute path). */
-  val RootConfKey = "graft.lsh.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_LSH_ROOT"))
-      .getOrElse(Paths.get("artifacts", "lsh").toAbsolutePath.toString)
-
   /** The signature rows: `(idCol, embCol, nrm, sig)` where `sig[t]` is the
     * vector's bucket in table `t` and `nrm` its staged L2 norm. */
   def signatures(emb: DataFrame, embCol: String, idCol: String,
@@ -53,7 +44,7 @@ object LshIndex {
       embCol: String, idCol: String, planesPerTable: Int, tables: Int,
       dim: Int = 64, seed: Long = 42L,
       artifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "lsh"))
     val corpus = Paths.get(corpusDir).getFileName.toString
     val key =
       s"${corpus}_v${FormatVersion}_p${planesPerTable}x${tables}_d${dim}_s$seed"

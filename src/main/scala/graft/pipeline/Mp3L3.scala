@@ -354,45 +354,6 @@ object Mp3L3 {
   val Cnt1BLenArr: Array[Int] = Array.fill(16)(4)
   val Cnt1BCodArr: Array[Int] = Array.tabulate(16)(cnt1BCod)
 
-  // ==== bit-level plumbing ================================================
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    var bitCount: Long = 0
-    def u(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nBits += 1
-        bitCount += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    /** Zero-pad to a byte boundary and return the bytes. */
-    def align(): Array[Byte] = {
-      if (nBits != 0) { cur <<= (8 - nBits); out.write(cur); cur = 0; nBits = 0 }
-      out.toByteArray
-    }
-  }
-
-  private final class BitReader(b: Array[Byte], startBit: Long) {
-    var pos: Long = startBit
-    def u(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) {
-        if (pos >= b.length.toLong * 8) throw new IllegalArgumentException("eof")
-        v = (v << 1) | ((b((pos >> 3).toInt) >> (7 - (pos & 7).toInt)) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-  }
-
   // ==== the encoder half ==================================================
 
   /** Common shape of the doc_id-derived per-granule construction
@@ -614,7 +575,7 @@ object Mp3L3 {
     val frameLen = 144 * kbps * 1000 / 44100 // padding bit 0
 
     // main data first (two-pass: side info needs part2_3_length)
-    val main = new BitWriter
+    val main = new Bits.Writer
     val p23 = gs.map { p =>
       val before = main.bitCount
       if (p.blockType == 2 && p.mixed == 1) {
@@ -687,7 +648,7 @@ object Mp3L3 {
     }
     val mainBytes = main.align()
 
-    val out = new BitWriter
+    val out = new Bits.Writer
     // header: sync, MPEG-1 (11), Layer III (01), no CRC (1)
     out.u(0xff, 8); out.u(0xfb, 8)
     out.u(10 + biIdx, 4); out.u(0, 2) /* 44.1 kHz */ ; out.u(0, 1); out.u(0, 1)
@@ -758,7 +719,7 @@ object Mp3L3 {
   /** Prefix-decode one big-value symbol via the table's hash decode
     * map (O(1) per bit). Returns the symbol index; throws on a code
     * matching nothing within the table's maximum length. */
-  private def huffDecodeBv(r: BitReader, t: BvTable): Int = {
+  private def huffDecodeBv(r: Bits.Reader, t: BvTable): Int = {
     if (t.maxV == 0) return 0 // table 0: zero bits, symbol (0,0)
     var code = 0
     var len = 0
@@ -774,7 +735,7 @@ object Mp3L3 {
   /** Prefix-decode one symbol from (hlen, hcod) arrays — the count1
     * tables' 16-entry linear scan. Throws on a code that matches
     * nothing within the table's maximum length (malformed stream). */
-  private def huffDecode(r: BitReader, hlen: Array[Int], hcod: Array[Int]): Int = {
+  private def huffDecode(r: Bits.Reader, hlen: Array[Int], hcod: Array[Int]): Int = {
     var code = 0
     var len = 0
     val maxLen = { var m = 0; var i = 0; while (i < hlen.length) { if (hlen(i) > m) m = hlen(i); i += 1 }; m }
@@ -812,7 +773,7 @@ object Mp3L3 {
       // joint-stereo mode extension: bit 1 = MS, bit 0 = intensity
       val ms = mode == 1 && (ext & 2) != 0
       val intensity = mode == 1 && (ext & 1) != 0
-      val r = new BitReader(b, 32)
+      val r = new Bits.Reader(b, 32)
       val mainDataBegin = r.u(9)
       if (mainDataBegin != 0) return None // bit reservoir unsupported
       r.u(if (nch == 1) 5 else 3) // private_bits
@@ -854,7 +815,7 @@ object Mp3L3 {
       }
       // main data starts right after the side info (no reservoir):
       // 17 bytes mono, 32 stereo
-      val main = new BitReader(b, (4 + (if (nch == 1) 17 else 32)).toLong * 8)
+      val main = new Bits.Reader(b, (4 + (if (nch == 1) 17 else 32)).toLong * 8)
       val g0Scalefacs: Array[Array[Int]] = new Array(nch)
       val granules = sides.zipWithIndex.map { case (s, slot) =>
         val gr = slot / nch

@@ -44,13 +44,6 @@ object PostingsIndex {
     * describes (thousands of buckets, each a co-located parquet split). */
   val TermBuckets = 64
 
-  val RootConfKey = "graft.postings.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_POSTINGS_ROOT"))
-      .getOrElse(Paths.get("artifacts", "postings").toAbsolutePath.toString)
-
   /** Partition bucket of a term — `pmod(xxhash64(term), TermBuckets)`. */
   def termBucket(term: Column): Column =
     pmod(xxhash64(term), lit(TermBuckets.toLong))
@@ -74,7 +67,7 @@ object PostingsIndex {
       idCol: String, textCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensure(spark, s"$corpusDir/documents.parquet",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "postings")),
       baseKey("post", corpusDir, variant)) { tmp =>
       Retrieval.postings(corpus, idCol, textCol)
         .withColumn("__tb", termBucket(col("term")))
@@ -98,7 +91,7 @@ object PostingsIndex {
     val post = ensurePostings(spark, corpusDir, corpus, idCol, textCol,
       variant, artifactRootOverride)
     ArtifactStore.ensure(spark, s"$corpusDir/documents.parquet",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "postings")),
       baseKey("dl", corpusDir, variant)) { tmp =>
       Retrieval.docLengths(post.select("term", "id", "tf"))
         .write.mode("overwrite").parquet(tmp)
@@ -116,7 +109,7 @@ object PostingsIndex {
     val post = ensurePostings(spark, corpusDir, corpus, idCol, textCol,
       variant, artifactRootOverride)
     ArtifactStore.ensure(spark, s"$corpusDir/documents.parquet",
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "postings")),
       baseKey("tstat", corpusDir, variant)) { tmp =>
       post.groupBy(col("term"))
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
@@ -151,7 +144,7 @@ object PostingsIndex {
       baseDocs: DataFrame, idCol: String, textCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "postings")),
       segKey(corpusDir, variant),
       sourceFile = Some(s"$corpusDir/documents.parquet")) { tmp =>
       Retrieval.postings(baseDocs, idCol, textCol)
@@ -163,7 +156,7 @@ object PostingsIndex {
       idCol: String, textCol: String, variant: String,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "postings")),
       segKey(corpusDir, variant)) { tmp =>
       Retrieval.postings(newDocs, idCol, textCol)
         .write.mode("overwrite").parquet(tmp)

@@ -27,13 +27,6 @@ object PqIndex {
   /** Bump when the encoding algorithm or artifact layout changes. */
   val FormatVersion = 1
 
-  val RootConfKey = "graft.pq.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_PQ_ROOT"))
-      .getOrElse(Paths.get("artifacts", "pq").toAbsolutePath.toString)
-
   /** Codebook choice; `token` feeds every artifact cache key. All
     * flavors share the geometry: `m` subspaces × `k` codewords over
     * `dim`-dim vectors. */
@@ -75,7 +68,7 @@ object PqIndex {
   def ensureCodebook(spark: SparkSession, corpusDir: String, emb: => DataFrame,
       embCol: String, idCol: String, quantizer: Quantizer = Stride(),
       artifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "pq"))
     val corpus = Paths.get(corpusDir).getFileName.toString
     val key = s"pq_${corpus}_codebook_v${FormatVersion}_${quantizer.token}"
     ArtifactStore.ensure(spark, s"$corpusDir/embeddings.parquet", root, key) { tmp =>
@@ -90,7 +83,7 @@ object PqIndex {
   def ensure(spark: SparkSession, corpusDir: String, emb: => DataFrame,
       embCol: String, idCol: String, quantizer: Quantizer = Stride(),
       artifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "pq"))
     val corpus = Paths.get(corpusDir).getFileName.toString
     val key = s"pq_${corpus}_codes_v${FormatVersion}_${quantizer.token}"
     ArtifactStore.ensure(spark, s"$corpusDir/embeddings.parquet", root, key) { tmp =>
@@ -114,7 +107,7 @@ object PqIndex {
       coarse: IvfIndex.Quantizer = IvfIndex.Stride(),
       artifactRootOverride: Option[String] = None,
       ivfArtifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "pq"))
     val corpus = Paths.get(corpusDir).getFileName.toString
     val key = s"rpq_${corpus}_codebook_v${FormatVersion}_ivfv${IvfIndex.FormatVersion}" +
       s"_${quantizer.token}_${coarse.token}"
@@ -138,7 +131,7 @@ object PqIndex {
       coarse: IvfIndex.Quantizer = IvfIndex.Stride(),
       artifactRootOverride: Option[String] = None,
       ivfArtifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "pq"))
     val corpus = Paths.get(corpusDir).getFileName.toString
     val key = s"rpq_${corpus}_codes_v${FormatVersion}_ivfv${IvfIndex.FormatVersion}" +
       s"_${quantizer.token}_${coarse.token}"
@@ -175,7 +168,7 @@ object PqIndex {
       coarse: IvfIndex.Quantizer = IvfIndex.Stride(),
       artifactRootOverride: Option[String] = None,
       ivfArtifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "pq"))
     val corpus = Paths.get(corpusDir).getFileName.toString
     val key = s"ivfpq_${corpus}_v${FormatVersion}_ivfv${IvfIndex.FormatVersion}" +
       s"_${quantizer.token}_${coarse.token}"

@@ -192,13 +192,6 @@ object Sketches {
 
   // ---- persisted artifacts ----------------------------------------------
 
-  val RootConfKey = "graft.sketch.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_SKETCH_ROOT"))
-      .getOrElse(Paths.get("artifacts", "sketch").toAbsolutePath.toString)
-
   val FormatVersion = 1
 
   /** Persisted CMS cells for the term counts of `corpus`'s text column.
@@ -212,7 +205,7 @@ object Sketches {
       termCounts: DataFrame, termCol: String, cntCol: String, variant: String,
       width: Int, artifactRootOverride: Option[String] = None): DataFrame = {
     val raw = ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sketch")),
       cmsKey(corpusDir, variant, width),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => cmsCells(termCounts, termCol, cntCol, width)
@@ -226,7 +219,7 @@ object Sketches {
       variant: String, width: Int,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sketch")),
       cmsKey(corpusDir, variant, width)) {
       tmp => cmsCells(newTermCounts, termCol, cntCol, width)
         .write.mode("overwrite").parquet(tmp)
@@ -244,7 +237,7 @@ object Sketches {
       values: DataFrame, valueCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame = {
     val raw = ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sketch")),
       hllKey(corpusDir, variant),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => hllRegisters(values, valueCol).write.mode("overwrite").parquet(tmp)
@@ -256,7 +249,7 @@ object Sketches {
       newValues: DataFrame, valueCol: String, variant: String,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sketch")),
       hllKey(corpusDir, variant)) {
       tmp => hllRegisters(newValues, valueCol).write.mode("overwrite").parquet(tmp)
     }
@@ -273,7 +266,7 @@ object Sketches {
       values: DataFrame, valueCol: String, variant: String, bits: Int,
       artifactRootOverride: Option[String] = None): DataFrame = {
     val raw = ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sketch")),
       bloomKey(corpusDir, variant, bits),
       sourceFile = Some(s"$corpusDir/documents.parquet")) {
       tmp => bloomWords(values, valueCol, bits)
@@ -286,7 +279,7 @@ object Sketches {
       newValues: DataFrame, valueCol: String, variant: String, bits: Int,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sketch")),
       bloomKey(corpusDir, variant, bits)) {
       tmp => bloomWords(newValues, valueCol, bits)
         .write.mode("overwrite").parquet(tmp)

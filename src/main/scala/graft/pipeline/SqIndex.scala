@@ -31,19 +31,12 @@ object SqIndex {
   /** Bump when the quantization scheme or artifact layout changes. */
   val FormatVersion = 1
 
-  val RootConfKey = "graft.sq.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_SQ_ROOT"))
-      .getOrElse(Paths.get("artifacts", "sq").toAbsolutePath.toString)
-
   /** Persisted flat codes `(idCol, codes, scale)` for the corpus at
     * `corpusDir`. */
   def ensure(spark: SparkSession, corpusDir: String, emb: => DataFrame,
       embCol: String, idCol: String,
       artifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sq"))
     val key = s"sq8_${Paths.get(corpusDir).getFileName}_v$FormatVersion"
     ArtifactStore.ensure(spark, s"$corpusDir/embeddings.parquet", root, key) { tmp =>
       Quantize.withQuantizedPacked(emb.select(col(idCol), col(embCol)), embCol)
@@ -65,7 +58,7 @@ object SqIndex {
       baseEmb: DataFrame, embCol: String, idCol: String, variant: String,
       artifactRootOverride: Option[String] = None): DataFrame =
     ArtifactStore.ensureSegmented(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sq")),
       segKey(corpusDir, variant),
       sourceFile = Some(s"$corpusDir/embeddings.parquet")) { tmp =>
       Quantize.withQuantizedPacked(baseEmb.select(col(idCol), col(embCol)), embCol)
@@ -78,7 +71,7 @@ object SqIndex {
       embCol: String, idCol: String, variant: String,
       artifactRootOverride: Option[String] = None): Unit =
     ArtifactStore.appendSegment(spark,
-      artifactRootOverride.getOrElse(artifactRoot(spark)),
+      artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sq")),
       segKey(corpusDir, variant)) { tmp =>
       Quantize.withQuantizedPacked(newEmb.select(col(idCol), col(embCol)), embCol)
         .select(col(idCol), col("codes"), col("scale"))
@@ -96,7 +89,7 @@ object SqIndex {
       quantizer: IvfIndex.Quantizer = IvfIndex.Stride(),
       artifactRootOverride: Option[String] = None,
       ivfArtifactRootOverride: Option[String] = None): DataFrame = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "sq"))
     val key = s"ivfsq8_${Paths.get(corpusDir).getFileName}" +
       s"_v${FormatVersion}_ivfv${IvfIndex.FormatVersion}_${quantizer.token}"
     ArtifactStore.ensure(spark, s"$corpusDir/embeddings.parquet", root, key) { tmp =>

@@ -42,43 +42,7 @@ import org.apache.spark.sql.types._
   */
 object Vp9Ivf {
 
-  // ==== bit/byte plumbing =================================================
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def u(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nBits += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    /** Zero-pad to a byte boundary and return the bytes. */
-    def bytes(): Array[Byte] = {
-      if (nBits != 0) { cur <<= (8 - nBits); out.write(cur); cur = 0; nBits = 0 }
-      out.toByteArray
-    }
-  }
-
-  private final class BitReader(b: Array[Byte], from: Int, until: Int) {
-    private var pos = from * 8
-    private val end = until * 8
-    def u(bits: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < bits) {
-        if (pos >= end) throw new IllegalArgumentException("eof")
-        v = (v << 1) | ((b(pos >> 3) >> (7 - (pos & 7))) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-  }
+  // ==== byte plumbing =====================================================
 
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
   private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
@@ -104,7 +68,7 @@ object Vp9Ivf {
   private def pts(d: Long, f: Int): Long = d * 7 + f * 1000L
 
   private def frameBits(d: Long, key: Boolean): Array[Byte] = {
-    val w = new BitWriter
+    val w = new Bits.Writer
     val p = profile(d)
     w.u(2, 2) // frame_marker 0b10
     w.u(p & 1, 1) // profile_low_bit
@@ -123,7 +87,7 @@ object Vp9Ivf {
       w.u(ivfH(d) + 2 - 1, 16) // frame_height_minus_1 (bitstream h = ivf h + 2)
       w.u(0, 1) // render_and_frame_size_different
     }
-    w.bytes()
+    w.align()
   }
 
   /** Deterministic IVF file for a seed: "DKIF" header (libvpx layout:
@@ -176,7 +140,7 @@ object Vp9Ivf {
 
   private def parseKeyHeader(b: Array[Byte], from: Int, until: Int): Option[KeyInfo] =
     try {
-      val r = new BitReader(b, from, until)
+      val r = new Bits.Reader(b, from * 8L, until * 8L)
       if (r.u(2) != 2) return None
       val lo = r.u(1); val hi = r.u(1)
       val p = (hi << 1) | lo
@@ -200,7 +164,7 @@ object Vp9Ivf {
   /** (isValidMarker, isKey) from a frame's first bits. */
   private def classify(b: Array[Byte], from: Int, until: Int): Option[Boolean] =
     try {
-      val r = new BitReader(b, from, until)
+      val r = new Bits.Reader(b, from * 8L, until * 8L)
       if (r.u(2) != 2) return None
       val lo = r.u(1); val hi = r.u(1)
       if (((hi << 1) | lo) == 3) r.u(1)

@@ -18,14 +18,6 @@ import graft.pipeline.ArtifactStore
   */
 object MediaFixture {
 
-  val RootConfKey = "graft.media.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .orElse(sys.env.get("GRAFT_MEDIA_ROOT"))
-      .getOrElse(java.nio.file.Paths.get("artifacts", "media")
-        .toAbsolutePath.toString)
-
   /** doc_id → stable file name; zero-padded so path order = id order. */
   def fileName(docId: Long): String = f"doc_$docId%012d.ivf"
 
@@ -40,7 +32,7 @@ object MediaFixture {
   def ensureGifAnimDir(spark: SparkSession, corpusDir: String,
       docs: DataFrame): String =
     ArtifactStore.ensureDir(s"$corpusDir/documents.parquet",
-      artifactRoot(spark),
+      ArtifactStore.root(spark, "media"),
       s"gifanim_${java.nio.file.Paths.get(corpusDir).getFileName}_v1") { staging =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staging))
       import org.apache.spark.sql.functions.col
@@ -70,7 +62,7 @@ object MediaFixture {
   def ensureStructAvDir(spark: SparkSession, corpusDir: String,
       docs: DataFrame): String =
     ArtifactStore.ensureDir(s"$corpusDir/documents.parquet",
-      artifactRoot(spark),
+      ArtifactStore.root(spark, "media"),
       s"structav_${java.nio.file.Paths.get(corpusDir).getFileName}_v1") { staging =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staging))
       import org.apache.spark.sql.functions.col
@@ -94,7 +86,7 @@ object MediaFixture {
   def ensureVp9Dir(spark: SparkSession, corpusDir: String,
       docs: DataFrame): String =
     ArtifactStore.ensureDir(s"$corpusDir/documents.parquet",
-      artifactRoot(spark),
+      ArtifactStore.root(spark, "media"),
       s"vp9_${java.nio.file.Paths.get(corpusDir).getFileName}_v1") { staging =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staging))
       import org.apache.spark.sql.functions.col

@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.ArtifactStore
+
 /** Key-clustered parquet layout for point/range-lookup tables.
   *
   * The reference serves its hottest queries (block by number, tx by hash
@@ -42,16 +44,6 @@ object SortedLayout {
   /** Bump when the layout format or bucketing rule changes. */
   val FormatVersion = 1
 
-  /** Session conf key for the artifact root; falls back to a directory
-    * under the JVM working dir (the [[graft.pipeline.IvfIndex]]
-    * convention). */
-  val RootConfKey = "graft.layout.artifactRoot"
-
-  def artifactRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootConfKey)
-      .getOrElse(java.nio.file.Paths.get("artifacts", "layout")
-        .toAbsolutePath.toString)
-
   /** The clustered layout as an INGEST-TIME artifact (the
     * [[graft.pipeline.ArtifactStore]] lifecycle: staleness against the
     * source file's mtime, staged build, one atomic commit, concurrent
@@ -62,7 +54,7 @@ object SortedLayout {
       key: String, span: Long, rowGroupBytes: Long = 128L << 20,
       bloomCols: Seq[String] = Nil, bloomNdv: Long = 100000L,
       artifactRootOverride: Option[String] = None): String = {
-    val root = artifactRootOverride.getOrElse(artifactRoot(spark))
+    val root = artifactRootOverride.getOrElse(ArtifactStore.root(spark, "layout"))
     val name = new Path(sourceFile).getName.stripSuffix(".parquet")
     // rowGroupBytes (and the bloom config) are part of the key: they
     // shape the artifact's pruning granularity, so two callers
@@ -70,7 +62,7 @@ object SortedLayout {
     val bloomK = if (bloomCols.isEmpty) ""
       else s"_b${bloomCols.sorted.mkString("-")}_n$bloomNdv"
     val k = s"${name}_layout_v${FormatVersion}_${key}_s${span}_g$rowGroupBytes$bloomK"
-    graft.pipeline.ArtifactStore.ensure(spark, sourceFile, root, k) { tmp =>
+    ArtifactStore.ensure(spark, sourceFile, root, k) { tmp =>
       write(df, tmp, key, span, rowGroupBytes, bloomCols, bloomNdv)
     }
     s"$root/$k"

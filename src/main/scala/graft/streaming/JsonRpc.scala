@@ -142,8 +142,8 @@ object JsonRpc {
     * response per transaction hash. Receipts drive the fields the block
     * body lacks — status, contractAddress, logs — exactly as the
     * reference packs them; a missing receipt means the node is mid-sync,
-    * so the whole block is reported as a hole (None) and the backfill
-    * ledger retries it (ST9). */
+    * so the whole block is reported as a hole (None). Today nothing
+    * re-fetches a hole: the live source skips it. */
   def assemble(blockNode: JsonNode,
       receiptOf: String => Option[JsonNode]): Option[PackedBlock] = {
     val blockHash = text(blockNode, "hash")
@@ -317,9 +317,10 @@ final case class HttpTransport(endpoint: String, timeoutMs: Long = 10000L)
   * JSON-RPC through any [[RpcTransport]] (`app/block/fetch.go:21-98`,
   * reimplemented from the public protocol instead of ethclient). Any
   * failed or partial fetch — RPC error object, null result, missing
-  * receipt — degrades to a HOLE (None): the syncer's ledger retries
-  * holes with backoff (ST9), which is the reference's retry queue
-  * semantics, so no retry loop lives here. */
+  * receipt — degrades to a HOLE (None). No retry loop lives here, and
+  * none lives in `graft.Serve` either: [[ChainSimSource]] skips a None
+  * height and nothing re-fetches it later, where the reference keeps a
+  * retry queue. */
 final case class JsonRpcFetcher(transport: RpcTransport) extends BlockFetcher {
   @transient private lazy val ids = new java.util.concurrent.atomic.AtomicLong(0L)
   @transient private lazy val lastHead = new java.util.concurrent.atomic.AtomicLong(-1L)

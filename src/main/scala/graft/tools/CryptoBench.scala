@@ -18,7 +18,7 @@ import graft.functions.{EvmFunctions => F, TxSender}
   */
 object CryptoBench {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
+    val spark = GraftSession.get()
     val nHash = sys.env.getOrElse("SPARK_GRAFT_KECCAK_N", "1000000").toLong
     val nRec = sys.env.getOrElse("SPARK_GRAFT_ECRECOVER_N", "20000").toLong
 

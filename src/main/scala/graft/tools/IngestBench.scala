@@ -23,7 +23,7 @@ import graft.streaming.{IngestJob, Publisher}
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
+    val spark = GraftSession.get()
     val src = sys.env.getOrElse("SPARK_GRAFT_PACKED",
       "/root/repo/fixtures/evm/packed_blocks.parquet")
     val batchBlocks = sys.env.getOrElse("SPARK_GRAFT_BATCH", "500").toLong

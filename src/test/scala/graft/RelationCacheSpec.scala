@@ -35,6 +35,23 @@ class RelationCacheSpec extends SparkSpec {
     assert(RelationCache.parquet(spark, p).count() === 25)
   }
 
+  test("a part file rewritten in place keeps the directory mtime: the memo still hits") {
+    // the documented staleness rule: the key stamps only the top-level
+    // paths' mtimes, so an in-place rewrite below them is not seen
+    val dir = Files.createTempDirectory("graft-relcache")
+    val p = dir.resolve("t.parquet")
+    spark.range(10).write.parquet(p.toString)
+    val a = RelationCache.parquet(spark, p.toString)
+    val dirMtime = Files.getLastModifiedTime(p)
+    val part = Files.list(p).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .find(_.getFileName.toString.startsWith("part-")).get
+    Files.write(part, Files.readAllBytes(part))
+    Files.setLastModifiedTime(part,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 5000))
+    assert(Files.getLastModifiedTime(p) === dirMtime)
+    assert(RelationCache.parquet(spark, p.toString) eq a)
+  }
+
   test("missing path bypasses the memo and throws like a plain read") {
     val gone = "/tmp/graft-relcache-definitely-missing.parquet"
     intercept[Exception] { RelationCache.parquet(spark, gone).count() }

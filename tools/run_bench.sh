@@ -22,7 +22,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   addopens="$addopens --add-opens java.base/$p=ALL-UNNAMED"
 done
-SPARK_GRAFT_SF_DIR="$sfdir" java -Xmx48g $addopens "$@" \
+SPARK_GRAFT_SF_DIR="$sfdir" java -Xmx${SPARK_DRIVER_MEM:-4g} $addopens "$@" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
   > "$log" 2>&1 || { echo "bench failed; see $log" >&2; exit 1; }
 # Bench prints exactly one JSON object line (starts with {"metric").
